@@ -11,21 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val defaultCpus = math.min(Runtime.getRuntime.availableProcessors(), 32)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // report per-bucket file sort order to the planner — valid
-      // because Bucketing.writeBucketed guarantees one file per
-      // bucket; without it q19's join re-sorts pre-sorted buckets
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     // session warmup (codegen, noop sink, shuffle machinery) so the
     // alphabetically-first query isn't charged ~3 s of JVM spin-up
     spark.range(1 << 20).selectExpr("sum(id) as s")
@@ -58,15 +44,7 @@ object Bench {
       catch { case _: Throwable => -1.0 }
       finally release()
     }
-    // SPARK_GRAFT_ONLY=q1,q2 restricts the sweep for local iteration
-    // (the Verify discipline); the driver never sets it, so the
-    // recorded bench always covers every registered query.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.view.filterKeys(names).toMap
-      case None        => SparkEntry.queries
-    }
+    val selected = SparkEntry.selectedQueries
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       name -> run(name, fn)
     }

@@ -15,6 +15,17 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     QueryRegistry.queryMap
 
+  /** [[queries]] restricted to the comma-separated names in
+    * `SPARK_GRAFT_ONLY` — local iteration on a few queries without a
+    * full sweep. Unset, every registered query runs. */
+  def selectedQueries: Map[String, (SparkSession, String) => DataFrame] =
+    sys.env.get("SPARK_GRAFT_ONLY") match {
+      case Some(only) =>
+        val names = only.split(",").map(_.trim).toSet
+        queries.view.filterKeys(names).toMap
+      case None => queries
+    }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import graft.model.{SchemaRegistry, TableId, TableMeta}
 import graft.stream.{CdcStreamEngine, TableStore}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,12 +15,7 @@ import org.apache.spark.sql.types._
   */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

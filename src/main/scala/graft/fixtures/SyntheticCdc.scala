@@ -176,30 +176,21 @@ object SyntheticCdc {
         Seq(ks, (col("c_acctbal") + 1000).cast("string")), ks)))))
   }
 
-  /** One micro-batch of a ROLLING change log over `customer` — the
-    * sustained-replay workload for the streaming benchmark
-    * ([[graft.StreamBench]]). Batch `b` touches every customer key:
+  /** One micro-batch of a ROLLING change log over a customer-shaped
+    * table `c` — the sustained-replay workload of the streaming
+    * benchmark (`perfbench`'s `replay_catchup`). Batch `b` touches
+    * every key:
     *  - %10 ≠ 4 : partial UPDATE  acctbal = b      (~90% of events)
     *  - %10 = 4 : INSERT   key  b·10⁷ + key        (~10%)
     *  - %10 = 4 : DELETE of batch b−1's insert     (~10%, b > 1)
-    * so per-batch volume ≈ 1.1×|customer| and the table size stays
-    * constant across batches (each batch's inserts retire in the
-    * next) — steady state, not unbounded growth, like the reference's
-    * continuous replay. Ordering clock: one xid_timestamp per batch,
-    * lsn unique per row (batch-prefixed so batches never collide). */
-  def rollingLog(spark: SparkSession, sfDir: String, batch: Int): DataFrame =
-    rollingLogOf(Tables.customer(spark, sfDir), batch)
-
-  /** [[rollingLog]] over an arbitrary customer-shaped table — the
-    * batch-volume lever for [[graft.StreamBench]]: an amplified key
-    * space (shifted copies of the fixture) scales events-per-batch
-    * without changing the loop under test. Insert keys are
-    * `key + batch·10⁷`, so key spaces shifted by ≥ 10⁹ stay disjoint
-    * PROVIDED `max base key + nBatches·10⁷ < 10⁹` — at sf ≳ 60 the
-    * customer fixture's keys reach 10⁷ and high-batch insert keys
-    * would cross into the next shifted copy's range. Callers that
-    * amplify must check that bound ([[graft.StreamBench]] requires it
-    * against the observed max key at setup). */
+    * so per-batch volume ≈ 1.1×|c| and the table size stays constant
+    * across batches (each batch's inserts retire in the next) — steady
+    * state, not unbounded growth, like the reference's continuous
+    * replay. Ordering clock: one xid_timestamp per batch, lsn unique
+    * per row (batch-prefixed so batches never collide). Insert keys
+    * are `key + batch·10⁷`, so a caller that amplifies `c` into key
+    * spaces shifted by ≥ 10⁹ keeps them disjoint only while
+    * `max base key + nBatches·10⁷ < 10⁹`; it must check that bound. */
   def rollingLogOf(c: DataFrame, batch: Int): DataFrame = {
     val k = col("c_custkey")
     val ks = k.cast("string")

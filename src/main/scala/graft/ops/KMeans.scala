@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -105,16 +106,28 @@ object KMeans {
           s => s.getField("sv")).as("s_new"))
       val cnt = assigned.groupBy(col("cell"))
         .agg(count(lit(1)).as("n_new"))
-      centroids = centroids.as("old")
+      val next = centroids.as("old")
         .join(sums.join(cnt, Seq("cell")), Seq("cell"), "left")
         .select(col("cell"),
           coalesce(col("s_new"), col("s")).as("s"),
           coalesce(col("n_new"), col("n")).as("n"))
         .localCheckpoint()
+      // the eager checkpoint above consumed the superseded codebook
+      releaseCheckpoints(centroids)
+      centroids = next
     }
     (assign(q, centroids).select(col("id"), col("cell").as("cluster")),
       centroids)
   }
+
+  /** Drops the block-manager copies of every `localCheckpoint` that
+    * `df` reads. Only for frames no later plan will read again: a
+    * released local checkpoint cannot be recomputed. */
+  private[ops] def releaseCheckpoints(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false); ()
+      case _ => ()
+    }
 
   /** IVF index-health report over a cluster assignment ([[train]]'s
     * output, or the cell column of a persisted

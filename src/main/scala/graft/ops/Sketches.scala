@@ -452,8 +452,8 @@ object Sketches {
     * The two ≤finest-row checkpoints stay in the block manager until
     * the session drops them — a long-lived session that calls this
     * repeatedly should clear persistent RDDs once the returned frame
-    * has been consumed (Bench/Verify/ProfileQuery already unpersist
-    * after every query; noted per ADVICE r15). */
+    * has been consumed ([[graft.Bench]] unpersists after every
+    * query). */
   def joinSizeEstimateMulti(left: DataFrame, leftKey: Column,
       right: DataFrame, rightKey: Column, buckets: Seq[Int]): DataFrame = {
     import graft.functions.Routing

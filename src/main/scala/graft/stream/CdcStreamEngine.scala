@@ -64,8 +64,8 @@ final class CdcStreamEngine(
   private var currentTargetVersion: Long = Long.MinValue
   private var committedAtBatchStart: Map[String, Long] = Map.empty
 
-  /** Crash-injection point for recovery measurement (StreamBench
-    * SPARK_GRAFT_STREAM_KILL_AT / CdcStreamSpec): kill the stream at
+  /** Crash-injection point for recovery tests and measurement
+    * (CdcStreamSpec, perfbench `replay_catchup`): kill the stream at
     * batch `id`, either `pre_commit` (versions staged, manifest NOT
     * advanced — the torn-stage crash; replay re-stages and commits) or
     * `post_commit` (manifest advanced, checkpoint NOT — the

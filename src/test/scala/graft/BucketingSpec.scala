@@ -14,16 +14,6 @@ import org.apache.spark.sql.functions._
 class BucketingSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withConf[T](pairs: (String, String)*)(body: => T): T = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("bucketed equi-join: no exchange, no sort, one file per bucket") {
     // force SMJ (broadcast would hide the layout) and a static plan
     withConf(

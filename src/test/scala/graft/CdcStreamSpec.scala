@@ -247,6 +247,65 @@ class CdcStreamSpec extends SparkSpec {
       Set("shopdb_public.customer", "crmdb_public.customer"))
   }
 
+  test("federation: per-db slots drop stale-slot rows; one db's ALTER leaves the other's schema") {
+    // the production topology: one spool carries two source databases,
+    // each bound to its own replication slot. A stale slot still
+    // emitting for db1 must be dropped even though its rows sort AFTER
+    // the legitimate updates (a leak would win the collapse), and an
+    // ALTER on db2 must evolve db2 only, in the same committed batch.
+    val db1 = TableId("db1", "public", "customer")
+    val db2 = TableId("db2", "public", "customer")
+    val registry = new SchemaRegistry
+    Seq(db1, db2).foreach(t => registry.register(TableMeta(t, custSchema, Seq("c_custkey"))))
+    val store = new TableStore(spark, Files.createTempDirectory("graft-fed-").toString)
+    Seq(db1, db2).foreach(t => store.stage(t, Seq(
+      (1L, "Alice", 10.0), (2L, "Bob", 20.0)).toDF("c_custkey", "c_name", "c_acctbal"), 0L))
+    store.commit(Map(db1 -> 0L, db2 -> 0L))
+    val spool = Files.createTempDirectory("graft-spool-").toString
+    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
+    val engine = CdcStreamEngine.withDdl(spark, registry, store,
+      slotByDb = Map("db1" -> "slot_db1", "db2" -> "slot_db2"))
+
+    def update(key: Long, bal: Double) =
+      s"""{"kind":"update","schema":"public","table":"customer",
+        "columnnames":["c_custkey","c_acctbal"],"columnvalues":[$key,$bal],
+        "oldkeys":{"keynames":["c_custkey"],"keyvalues":[$key]}}"""
+    Seq(
+      ("db1", "slot_db1", 1L, update(1L, 11.0)),
+      ("db1", "slot_db1", 2L, update(2L, 22.0)),
+      ("db2", "slot_db2", 3L, update(1L, 111.0)),
+      ("db2", "slot_db2", 4L,
+        """{"kind":"insert","schema":"public","table":"sql_ddl_statements",
+        "columnnames":["current_query","search_path","command_tags"],
+        "columnvalues":["ALTER TABLE customer ADD COLUMN c_tier text",
+          "public","{\"ALTER TABLE\"}"]}"""),
+      ("db2", "slot_db2", 5L,
+        """{"kind":"insert","schema":"public","table":"customer",
+        "columnnames":["c_custkey","c_name","c_acctbal","c_tier"],
+        "columnvalues":[3,"Cy",30.0,"gold"]}"""),
+      // stale slot, newest LSNs, on both databases
+      ("db1", "stale_slot", 6L, update(1L, -999.0)),
+      ("db1", "stale_slot", 7L, update(2L, -999.0)),
+      ("db2", "stale_slot", 8L, update(2L, -999.0)))
+      .toDF("database", "source_slotname", "lsn_start", "payload")
+      .withColumn("insert_timestamp", timestamp_seconds(lit(1700000000L) + col("lsn_start")))
+      .withColumn("xid", col("lsn_start"))
+      .withColumn("xid_timestamp", col("insert_timestamp"))
+      .coalesce(1).write.mode("append").parquet(spool)
+    run(engine, spool, ckpt)
+
+    assert(store.read(db1).orderBy("c_custkey").collect().toSeq ==
+      Seq(Row(1L, "Alice", 11.0), Row(2L, "Bob", 22.0)))
+    assert(store.read(db2).orderBy("c_custkey").collect().toSeq == Seq(
+      Row(1L, "Alice", 111.0, null), Row(2L, "Bob", 20.0, null), Row(3L, "Cy", 30.0, "gold")))
+    assert(registry(db1).schema == custSchema, "db2's ALTER leaked into db1")
+    assert(registry(db2).schema.fieldNames.toSeq ==
+      Seq("c_custkey", "c_name", "c_acctbal", "c_tier"))
+    // both databases published by the one batch's manifest cut
+    val m = store.manifest()
+    assert(m(db1.qualified) == m(db2.qualified) && m(db1.qualified) > 0L)
+  }
+
   test("table RENAME TO mid-batch: pre/post-rename DML land, old name retires atomically") {
     val (engine0, store, registry, spool, ckpt) = freshEngine()
     val engine = graft.stream.CdcStreamEngine.withDdl(spark, registry, store)

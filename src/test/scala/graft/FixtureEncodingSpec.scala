@@ -121,9 +121,9 @@ class FixtureEncodingSpec extends SparkSpec {
   }
 
   test("non-UTC session fails loudly on the NTZ cast instead of shifting instants") {
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-    try intercept[IllegalArgumentException](Tables.events(spark, ntzDir))
-    finally spark.conf.set("spark.sql.session.timeZone", "UTC")
+    withConf("spark.sql.session.timeZone" -> "America/New_York") {
+      intercept[IllegalArgumentException](Tables.events(spark, ntzDir))
+    }
   }
 
   test("embeddings shipped as array<double> still drive the ANN ops") {

@@ -10,16 +10,6 @@ import org.apache.spark.sql.functions._
 class IvfIndexSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withConf[T](pairs: (String, String)*)(body: => T): T = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   // deterministic 8-dim vectors, enough spread for 8 distinct cells
   private def vec(id: Long): Seq[Double] =
     Seq.tabulate(8)(j => ((id * (j + 3)) % 17).toDouble / 4.0)
@@ -123,8 +113,11 @@ class IvfIndexSpec extends SparkSpec {
 
   test("buildSq8 + querySq8 ≡ ADC over in-memory codes restricted to probed cells") {
     val dir = tmpDir("sq8")
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet
     IvfIndex.buildSq8(corpus, "vec_id", "embedding", dir,
       kCells = 8, iters = 2)
+    // the build's training and stats checkpoints are released on return
+    assert(spark.sparkContext.getPersistentRDDs.keySet == pinned)
     val queries = corpus.filter(col("vec_id") < 10)
     val fromIndex = IvfIndex.querySq8(queries, "vec_id", "embedding", dir,
       topK = 3, nProbe = 8) // nProbe = kCells → candidate set = whole corpus

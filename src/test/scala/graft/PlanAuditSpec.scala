@@ -16,11 +16,10 @@ class PlanAuditSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def audited[T](df: => DataFrame)(body: DataFrame => T): T = {
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try { val d = df; d.collect(); body(d) }
-    finally spark.conf.unset("spark.sql.adaptive.enabled")
-  }
+  private def audited[T](df: => DataFrame)(body: DataFrame => T): T =
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      val d = df; d.collect(); body(d)
+    }
 
   private def scans(df: DataFrame): Seq[FileSourceScanExec] =
     df.queryExecution.executedPlan.collect { case f: FileSourceScanExec => f }
@@ -259,13 +258,10 @@ class PlanAuditSpec extends SparkSpec {
     // fact scan, cutting shuffle input before the exchange. Thresholds
     // are lowered so the toy-scale fixture takes the same plan shape a
     // 1000-executor cluster would.
-    val confs = Seq(
+    withConf(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val old = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       import org.apache.spark.sql.functions._
       val orders = Tables.orders(spark, dir)
         .filter(col("o_orderpriority") === "1-URGENT")
@@ -282,9 +278,6 @@ class PlanAuditSpec extends SparkSpec {
           .filter(col("o_orderpriority") === "1-URGENT"),
           col("l_orderkey") === col("o_orderkey")).count()
       assert(joined.count() == expected)
-    } finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 

@@ -458,53 +458,38 @@ class VectorExprsSpec extends SparkSpec {
   }
 
   test("cosine_sim registered as SQL function via GraftExtensions") {
-    // extensions bind at session build: clear active+default so
-    // getOrCreate builds a fresh session over the shared context
-    // (the SchemaRemapRuleSpec pattern)
-    TestSpark.spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    val withExt = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
-      val r = withExt.sql(
-        """SELECT cosine_sim(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),
-                             array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c,
-                  char_mask('ab').lo AS lo""").collect()(0)
-      assert(math.abs(r.getDouble(0) - 1.0) < 1e-15)
-      assert(r.getLong(1) == 0L)
-      val hi = withExt.sql("SELECT char_mask('ab').hi AS hi").collect()(0).getLong(0)
-      // 'a'=97 → bit 33 of hi, 'b'=98 → bit 34
-      assert(hi == ((1L << 33) | (1L << 34)))
-      // the round-10 natives register too — SQL users get the same
-      // single-pass kernels the Scala API uses
-      val r2 = withExt.sql(
-        """SELECT simhash_md5('') AS sh,
-                  size(positioned_grams('a b c d', 2)) AS ng,
-                  size(hashed_gram_buckets('a b c', 16, true)) AS nb,
-                  size(cdc_chunks('hello world text', 4, 8, true)) AS nc,
-                  char_bits('ab') AS cb,
-                  dot_long(array(1L, 2L), array(3L, 4L)) AS d,
-                  nfc_normalize(decode(unhex('65CC81'), 'UTF-8')) = decode(unhex('C3A9'), 'UTF-8') AS nfc""").collect()(0)
-      assert(r2.getLong(0) == 0L)   // zero-token doc → 0
-      assert(r2.getInt(1) == 3)     // 3 positioned bigrams of 4 tokens
-      assert(r2.getInt(2) == 5)     // 3 unigrams + 2 bigrams
-      assert(r2.getInt(3) >= 1)     // chunks partition the text
-      assert(r2.getSeq[Int](4) == Seq(64 + 97 % 64, 64 + 98 % 64))
-      assert(r2.getLong(5) == 11L)  // 1·3 + 2·4
-      assert(r2.getBoolean(6))      // NFC composes e+U+0301 into é
-      // round-13: winnowing selection is SQL-reachable too; 4 tokens
-      // at k=4 → exactly one gram → exactly one fingerprint at pos 0
-      val r3 = withExt.sql(
-        "SELECT winnow_fingerprints('a b c d', 4, 4) AS fp").collect()(0)
-      val fp = r3.getSeq[org.apache.spark.sql.Row](0)
-      assert(fp.length == 1 && fp.head.getInt(0) == 0)
-    } finally {
-      org.apache.spark.sql.SparkSession.clearActiveSession()
-      org.apache.spark.sql.SparkSession.clearDefaultSession()
-    }
+    // the shared session is built with GraftExtensions installed
+    val r = spark.sql(
+      """SELECT cosine_sim(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),
+                           array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c,
+                char_mask('ab').lo AS lo""").collect()(0)
+    assert(math.abs(r.getDouble(0) - 1.0) < 1e-15)
+    assert(r.getLong(1) == 0L)
+    val hi = spark.sql("SELECT char_mask('ab').hi AS hi").collect()(0).getLong(0)
+    // 'a'=97 → bit 33 of hi, 'b'=98 → bit 34
+    assert(hi == ((1L << 33) | (1L << 34)))
+    // the round-10 natives register too — SQL users get the same
+    // single-pass kernels the Scala API uses
+    val r2 = spark.sql(
+      """SELECT simhash_md5('') AS sh,
+                size(positioned_grams('a b c d', 2)) AS ng,
+                size(hashed_gram_buckets('a b c', 16, true)) AS nb,
+                size(cdc_chunks('hello world text', 4, 8, true)) AS nc,
+                char_bits('ab') AS cb,
+                dot_long(array(1L, 2L), array(3L, 4L)) AS d,
+                nfc_normalize(decode(unhex('65CC81'), 'UTF-8')) = decode(unhex('C3A9'), 'UTF-8') AS nfc""").collect()(0)
+    assert(r2.getLong(0) == 0L)   // zero-token doc → 0
+    assert(r2.getInt(1) == 3)     // 3 positioned bigrams of 4 tokens
+    assert(r2.getInt(2) == 5)     // 3 unigrams + 2 bigrams
+    assert(r2.getInt(3) >= 1)     // chunks partition the text
+    assert(r2.getSeq[Int](4) == Seq(64 + 97 % 64, 64 + 98 % 64))
+    assert(r2.getLong(5) == 11L)  // 1·3 + 2·4
+    assert(r2.getBoolean(6))      // NFC composes e+U+0301 into é
+    // round-13: winnowing selection is SQL-reachable too; 4 tokens
+    // at k=4 → exactly one gram → exactly one fingerprint at pos 0
+    val r3 = spark.sql(
+      "SELECT winnow_fingerprints('a b c d', 4, 4) AS fp").collect()(0)
+    val fp = r3.getSeq[org.apache.spark.sql.Row](0)
+    assert(fp.length == 1 && fp.head.getInt(0) == 0)
   }
 }
